@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics beyond connected components: PageRank in exact
   * integer arithmetic, so a fixed-iteration run replays value-for-value
@@ -60,31 +62,6 @@ object GraphOps {
           expr("2 * coalesce(n_tri, 0) * 1000000 div (d * (d - 1))"))
           .otherwise(lit(0L)).cast("bigint").as("lcc_ppm"))
   }
-
-  /** Broadcast a MATERIALIZED (checkpointed) frame when its row count
-    * — one cheap count over the in-memory checkpoint blocks — says it
-    * fits comfortably; otherwise return it unchanged. Scale-adaptive
-    * join-strategy choice (opt-guide §3.1: broadcast the side that
-    * fits): a checkpointed frame plans as an RDD leaf with no size
-    * stats, so the planner otherwise picks a shuffle join for a
-    * few-MB edge/state list consumed every iteration — measured one
-    * full Exchange+Sort pair per round on q192's 40k-row edge list.
-    * The cap is rows, not a local[32] constant: at cluster scale a
-    * 100-TB edge list fails the count test and the shuffle join
-    * stands, so behavior degrades to exactly the old plan.
-    */
-  private def broadcastIfSmall(df: DataFrame, maxRows: Long = 2000000L): DataFrame =
-    if (df.count() <= maxRows) broadcast(df) else df
-
-  /** Row cap under which iteration-state frames (node-bounded, never
-    * growing) are broadcast into their per-round joins. The DECISION
-    * is made once per operator from a single count of the initial
-    * materialized state — gating inside the loop would add one
-    * driver-blocking count job per round, which is exactly the
-    * overhead class these loops are being cured of (measured: q117
-    * went 5.1s → 6.6s when the gate counted inside the loop).
-    */
-  private val StateBroadcastRows = 2000000L
 
   /** Canonical undirected edge set: orientation-normalized BEFORE
     * distinct — a reversed duplicate (2,1)+(1,2) would otherwise
@@ -273,7 +250,7 @@ object GraphOps {
     val edges0 = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true) // consumed every round
-    val edges = broadcastIfSmall(edges0) // §3.1: one exchange per round
+    val edges = DriverGate.broadcastIfSmall(edges0) // §3.1: one exchange per round
     var dist = seeds.select(col("node").cast("bigint").as("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint(true)
     for (r <- 1 to maxHops) {
@@ -310,7 +287,7 @@ object GraphOps {
     val edges0 = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true) // consumed every round
-    val edges = broadcastIfSmall(edges0) // §3.1: one Exchange per round, not three
+    val edges = DriverGate.broadcastIfSmall(edges0) // §3.1: one Exchange per round, not three
     var dist = seeds.select(col("node").cast("bigint").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
@@ -505,7 +482,7 @@ object GraphOps {
     // shrinks): the peel round becomes scan → BHJ → BHJ → one
     // exchange (the groupBy key); falls back to shuffle joins at scale
     val bState: DataFrame => DataFrame =
-      if (n <= StateBroadcastRows) broadcast else identity
+      if (DriverGate.fits(n)) broadcast else identity
     while (r < maxRounds && !converged) {
       val next = edges
         .join(bState(alive.select(col("node").as("src"))), Seq("src"))
@@ -682,7 +659,7 @@ object GraphOps {
       .localCheckpoint(true)
     // §3.1, decided once (label state is node-sized every round)
     val bState: DataFrame => DataFrame =
-      if (labels.count() <= StateBroadcastRows) broadcast else identity
+      if (DriverGate.fits(labels.count())) broadcast else identity
     for (_ <- 1 to iters) {
       // argmax by (count DESC, label ASC) as a map-side-combinable
       // min over the (-count, label) struct — same total order the
@@ -765,7 +742,7 @@ object GraphOps {
     // node set, which only shrinks across outer rounds — one count
     // gates them all, with the shuffle-join fallback at scale
     val bState: DataFrame => DataFrame =
-      if (nodes.count() <= StateBroadcastRows) broadcast else identity
+      if (DriverGate.fits(nodes.count())) broadcast else identity
     var outer = 0
     while (outer < maxOuter) {
       if (nodes.isEmpty) return done
@@ -846,17 +823,71 @@ object GraphOps {
     * q47/q62/q70 shape — a global constant attached map-side, not an
     * unpartitioned window funnel).
     *
-    * Scale shape: per round, two edge-keyed equi-join + map-side-
-    * combinable groupBy passes (one per direction) and two scalar
-    * maxes; edges/nodes materialized once, per-round lineage
-    * truncated (the q26 rule). Nodes missing a side coalesce to 0 —
-    * both engines carry the full node set every round.
+    * Scale shape: the edge set is materialized once, and one bounded
+    * `limit(cap + 1)` collect of it picks the path:
+    *
+    *   - at most [[DriverGate.MaxRows]] edges: the same integer half-
+    *     steps run on the driver (`Math.addExact` sums, so overflow
+    *     stays loud as under ANSI), and auth/hub become local frames.
+    *   - above the cap: per round, two edge-keyed equi-join + map-side-
+    *     combinable groupBy passes (one per direction) and two scalar
+    *     maxes; nodes materialized once, per-round lineage truncated
+    *     (the q26 rule).
+    *
+    * Nodes missing a side score 0 — both engines carry the full node
+    * set every round. The final top-k join, order and rank are Spark's
+    * on either path.
     */
-  def hits(edges0: DataFrame, iters: Int = 3, k: Int = 20): DataFrame = {
+  def hits(edges0: DataFrame, iters: Int = 3, k: Int = 20): DataFrame =
+    hits(edges0, iters, k, DriverGate.MaxRows)
+
+  /** [[hits]] with the driver-path row cap as a parameter: 0 sends
+    * every non-empty edge set to the distributed loop.
+    */
+  private[graft] def hits(edges0: DataFrame, iters: Int, k: Int, driverRows: Long): DataFrame = {
     require(iters >= 1 && iters <= 10, "iterations in [1,10]")
     val edges = edges0
       .select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
       .where(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+    val small = edges.select(col("src").cast("binary"), col("dst").cast("binary"))
+      .limit(math.min(driverRows + 1, Int.MaxValue).toInt).collect()
+    val (auth, hub) =
+      if (DriverGate.fits(small.length, driverRows)) driverHits(edges.sparkSession, small, iters)
+      else distributedHits(edges, iters)
+    auth.join(hub, Seq("node"))
+      .orderBy(col("a").desc, col("node").asc).limit(k)
+      .withColumn("rank",
+        row_number().over(Window.orderBy(col("a").desc, col("node").asc)))
+      .select(col("node"), col("a").as("auth"), col("h").as("hub"),
+        col("rank").cast("bigint").as("rank"))
+  }
+
+  /** HITS half-steps over a collected edge list (src, dst as string
+    * bytes): returns the (node, a) and (node, h) local frames.
+    */
+  private def driverHits(spark: SparkSession, rows: Array[Row], iters: Int): (DataFrame, DataFrame) = {
+    val (nodes, src, dst) = DriverGate.denseEdges(rows, BinaryType)
+    def half(from: Array[Long], in: Array[Int], out: Array[Int]): Array[Long] = {
+      val s = new Array[Long](nodes.length)
+      for (e <- in.indices) s(out(e)) = Math.addExact(s(out(e)), from(in(e)))
+      val scale = math.max(if (s.isEmpty) 0L else s.max / 1000000L, 1L)
+      s.map(_ / scale)
+    }
+    var hub = Array.fill(nodes.length)(1000000L)
+    var auth = new Array[Long](nodes.length)
+    for (_ <- 1 to iters) {
+      auth = half(hub, src, dst)
+      hub = half(auth, dst, src)
+    }
+    def frame(score: Array[Long], out: String): DataFrame =
+      spark.createDataFrame(
+          nodes.indices.map(i => Row(DriverGate.wireValue(nodes(i)), score(i))).asJava,
+          StructType(Seq(StructField("node", BinaryType), StructField(out, LongType))))
+        .select(col("node").cast("string").as("node"), col(out))
+    (frame(auth, "a"), frame(hub, "h"))
+  }
+
+  private def distributedHits(edges: DataFrame, iters: Int): (DataFrame, DataFrame) = {
     val nodes = edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
@@ -885,12 +916,7 @@ object GraphOps {
           .groupBy(col("src")).agg(sum(col("a")).as("s"))
           .select(col("src").as("node"), col("s")), "h")
     }
-    auth.join(hub, Seq("node"))
-      .orderBy(col("a").desc, col("node").asc).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("a").desc, col("node").asc)))
-      .select(col("node"), col("a").as("auth"), col("h").as("hub"),
-        col("rank").cast("bigint").as("rank"))
+    (auth, hub)
   }
 
   /** Deterministic "random" walks — the DeepWalk/node2vec training-

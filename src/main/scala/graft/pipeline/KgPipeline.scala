@@ -1,9 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The end-to-end KG-construction DAG (north_rule):
   *
@@ -275,21 +277,37 @@ object KgPipeline {
     * insensitive 64-bit hash sums (and the cap throws rather than
     * shipping unstable labels into an oracle-gated result).
     *
-    * Scale notes: the input edge set is materialized ONCE up front
-    * (persist) so an expensive upstream lineage — e.g. the full
-    * MinHash-LSH pipeline feeding q26 — is not recomputed per round;
-    * each round persists its output, checks convergence on that same
-    * materialization, then releases the previous round's cache.
+    * Scale notes: the canonical edge set is materialized ONCE up front
+    * (eager localCheckpoint) so an expensive upstream lineage — e.g.
+    * the full MinHash-LSH pipeline feeding q26 — is computed once, and
+    * its signature's row count picks the path:
+    *
+    *   - at most [[DriverGate.MaxRows]] edges (and integral or binary-
+    *     collated string ids): ONE collect, then union-find on the
+    *     driver with dense ids in Spark's order and a min-root union,
+    *     so each root is its component's minimum. The result is a
+    *     local frame; no Spark job runs per round.
+    *   - above the cap: the distributed large-star/small-star loop,
+    *     where each round checkpoints its output, checks convergence
+    *     on that same materialization, and the iteration cap throws.
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame =
+    connectedComponents(edges, maxIters, DriverGate.MaxRows)
+
+  /** [[connectedComponents]] with the driver-path row cap as a
+    * parameter: 0 sends every non-empty edge set to the distributed
+    * loop.
+    */
+  private[graft] def connectedComponents(edges: DataFrame, maxIters: Int,
+      driverRows: Long): DataFrame =
     // stage-cached: labels are a deterministic pure function of the
     // edge set, and several registered consumers (q26's labels, q32's
     // representatives, q66's split) ask for the same component table —
     // one iterative computation per session serves them all (verdict-r4
-    // #3). The result below ends checkpointed (its last `cur` is a
-    // checkpoint leaf), so a hit replays nothing.
+    // #3). Both paths end in a leaf (a local frame, or the last
+    // checkpointed `cur`), so a hit replays nothing.
     StageCache.getOrCompute("connectedComponents", s"it=$maxIters", edges) {
-      connectedComponentsUncached(edges, maxIters)
+      connectedComponentsUncached(edges, maxIters, driverRows)
     }
 
   /** Incremental connected-components maintenance: fold a batch of
@@ -315,7 +333,11 @@ object KgPipeline {
     * cost nothing.
     */
   def connectedComponentsDelta(baseLabels: DataFrame, deltaEdges: DataFrame,
-      maxIters: Int = 50): DataFrame = {
+      maxIters: Int = 50): DataFrame =
+    connectedComponentsDelta(baseLabels, deltaEdges, maxIters, DriverGate.MaxRows)
+
+  private[graft] def connectedComponentsDelta(baseLabels: DataFrame, deltaEdges: DataFrame,
+      maxIters: Int, driverRows: Long): DataFrame = {
     val lab = baseLabels.select(col("node").cast("string").as("node"),
       col("component").cast("string").as("component"))
     val de = deltaEdges.select(col("a").cast("string").as("a"),
@@ -328,7 +350,7 @@ object KgPipeline {
     val labelEdges = de.join(la, Seq("a")).join(lb, Seq("b"))
       .select(col("labA").as("a"), col("labB").as("b"))
       .where(col("a") =!= col("b")).distinct()
-    val merged = connectedComponents(labelEdges, maxIters)
+    val merged = connectedComponents(labelEdges, maxIters, driverRows)
       .select(col("node").as("oldLab"), col("component").as("newLab"))
     val updatedBase = lab.join(merged, lab("component") === merged("oldLab"), "left")
       .select(col("node"), coalesce(col("newLab"), col("component")).as("component"))
@@ -338,7 +360,8 @@ object KgPipeline {
     updatedBase.unionByName(freshLab).distinct()
   }
 
-  private def connectedComponentsUncached(edges: DataFrame, maxIters: Int): DataFrame = {
+  private def connectedComponentsUncached(edges: DataFrame, maxIters: Int,
+      driverRows: Long): DataFrame = {
     // canonical direction child > parent, self-loops dropped. Eager
     // localCheckpoint (NOT persist): it both materializes the upstream
     // lineage exactly once AND truncates the logical plan — without
@@ -395,6 +418,9 @@ object KgPipeline {
     }
 
     var sig = signature(cur)
+    val wire = DriverGate.wireType(cur.schema("u").dataType)
+    if (wire.isDefined && DriverGate.fits(sig._1, driverRows))
+      return driverComponents(cur, wire.get)
     var i = 0
     var converged = false
     while (i < maxIters && !converged) {
@@ -418,6 +444,34 @@ object KgPipeline {
     cur.select(col("u").as("node"), col("v").as("component"))
       .union(cur.select(col("v").as("node"), col("v").as("component")))
       .distinct()
+  }
+
+  /** Components of a small canonical edge set (u, v) on the driver: one
+    * collect, union-find over dense ids assigned in Spark's node order,
+    * each union keeping the smaller root — so every root is its
+    * component's minimum, the distributed fixpoint's label.
+    */
+  private def driverComponents(cur: DataFrame, wire: DataType): DataFrame = {
+    val dt = cur.schema("u").dataType
+    val rows = cur.select(col("u").cast(wire), col("v").cast(wire)).collect()
+    val (nodes, us, vs) = DriverGate.denseEdges(rows, wire)
+    val parent = Array.range(0, nodes.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    for (i <- us.indices) {
+      val (ru, rv) = (find(us(i)), find(vs(i)))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    val labels = nodes.indices.map(i =>
+      Row(DriverGate.wireValue(nodes(i)), DriverGate.wireValue(nodes(find(i)))))
+    cur.sparkSession.createDataFrame(labels.asJava,
+        StructType(Seq(StructField("node", wire), StructField("component", wire))))
+      .select(col("node").cast(dt).as("node"), col("component").cast(dt).as("component"))
   }
 
   /** Coherence-reranked entity disambiguation — the collective step

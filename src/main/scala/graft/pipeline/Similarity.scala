@@ -138,7 +138,7 @@ object Similarity {
     // exchange. The cap is conservative because rows carry the packed
     // array payload; above it both joins fall back to the r5 shuffle
     // plan. (The same shape as Dedup.md5JaccardVerify's r6 note.)
-    val packed = if (corpus.count() <= 200000L) broadcast(packed0) else packed0
+    val packed = if (DriverGate.fits(corpus.count(), 200000L)) broadcast(packed0) else packed0
     pairs
       .join(packed.select(col("vec_id").as(l), col("qv").as("ql")), Seq(l))
       .join(packed.select(col("vec_id").as(r), col("qv").as("qr")), Seq(r))

@@ -25,7 +25,7 @@ object QueryProbe {
       .foreach { q =>
         // per-query try: one failing warm-up query must not abort the rest
         try graft.SparkEntry.queries(q)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable => System.err.println(s"[probe] warm-up $q failed: ${e.getMessage}") }
+        catch { case e: Throwable => System.err.println(s"[probe] warm-up $q failed"); e.printStackTrace() }
       }
     // per-query codegen (janino compiles a fresh class per plan shape)
     // is not covered by the session warm-up — rep 1 carries it, rep 2+
@@ -41,6 +41,9 @@ object QueryProbe {
     // .explain("formatted") output to <dir>/<query>_<suffix>.txt
     // (suffix from SPARK_GRAFT_PROBE_PLAN_SUFFIX, default "plan") — the
     // judge-facing before/after plan artifact for optimization rounds.
+    // Building an iterative operator's frame runs its driver-blocking
+    // loop (checkpoints, counts, collects), so a plan dump executes most
+    // of such a query.
     val planDir = sys.env.get("SPARK_GRAFT_PROBE_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PROBE_PLAN_SUFFIX", "plan")
     names.foreach { name =>
@@ -53,7 +56,7 @@ object QueryProbe {
           java.nio.file.Files.createDirectories(p.getParent)
           java.nio.file.Files.writeString(p, formatted)
           println(s"PLAN $name -> $p")
-        } catch { case e: Throwable => println(s"PLAN $name FAILED ${e.getMessage}") }
+        } catch { case e: Throwable => println(s"PLAN $name FAILED"); e.printStackTrace(System.out) }
       }
       if (explain) {
         val df = fn(spark, sfDir)
@@ -69,7 +72,7 @@ object QueryProbe {
         try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           println(f"PROBE $name rep=$rep sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-        } catch { case e: Throwable => println(s"PROBE $name rep=$rep FAILED ${e.getMessage}") }
+        } catch { case e: Throwable => println(s"PROBE $name rep=$rep FAILED"); e.printStackTrace(System.out) }
       }
     }
     spark.stop()

@@ -600,10 +600,13 @@ class EventCorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     //   r2: aRaw x=1.5e6 y=2.5e6, scale 2 -> a x=750000 y=1250000
     //       hRaw h1=2e6 h2=1.25e6, scale 2 -> h h1=1000000 h2=625000
     val e = Seq(("h1", "x"), ("h1", "y"), ("h2", "y"), ("x", "x")).toDF("src", "dst")
-    val got = GraphOps.hits(e, iters = 2, k = 4).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(got.toSeq == Seq(("y", 1250000L, 0L, 1L), ("x", 750000L, 0L, 2L),
-      ("h1", 0L, 1000000L, 3L), ("h2", 0L, 625000L, 4L)), got.toSeq.toString)
+    // both paths: driver-side half-steps (default cap), distributed loop (cap 0)
+    Seq(DriverGate.MaxRows, 0L).foreach { cap =>
+      val got = GraphOps.hits(e, 2, 4, cap).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(got.toSeq == Seq(("y", 1250000L, 0L, 1L), ("x", 750000L, 0L, 2L),
+        ("h1", 0L, 1000000L, 3L), ("h2", 0L, 625000L, 4L)), s"cap $cap: ${got.toSeq}")
+    }
   }
 
   test("labelPropagation: sync rounds with min tiebreak split the barbell into its two triangles") {

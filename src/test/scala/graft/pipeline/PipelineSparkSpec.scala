@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -428,14 +428,24 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     streamed.foreach { case (k, j) => assert(math.abs(j - batch(k)) < 1e-3, s"$k: $j vs ${batch(k)}") }
   }
 
+  // every connected-components spec runs on both paths: driver-side
+  // union-find (default cap) and the distributed loop (cap 0)
+  private val ccCaps = Seq(DriverGate.MaxRows, 0L)
+
+  private def ccMap[K](edges: DataFrame, cap: Long)(key: (Row, Int) => K): Map[K, K] = {
+    StageCache.clear() // a hit would hand back the other path's labels
+    KgPipeline.connectedComponents(edges, 50, cap).collect().map(r => key(r, 0) -> key(r, 1)).toMap
+  }
+
   test("connected components labels every node with its component minimum") {
     val s = spark
     import s.implicits._
     // two components {1,2,3,7} (chain + branch) and {10,11}; 5 isolated (absent)
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 7L), (10L, 11L)).toDF("a", "b")
-    val out = KgPipeline.connectedComponents(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 10L -> 10L, 11L -> 10L))
+    ccCaps.foreach { cap =>
+      val out = ccMap(edges, cap)(_.getLong(_))
+      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 10L -> 10L, 11L -> 10L), s"cap $cap")
+    }
   }
 
   test("connected components converges on a 60-node path graph (diameter >> old 25-round cap)") {
@@ -445,19 +455,21 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // propagation; large-star/small-star must close it in O(log n)
     // rounds without tripping the iteration cap
     val chain = (1L until 60L).map(i => (i + 1, i)).toDF("a", "b")
-    val out = KgPipeline.connectedComponents(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out.keySet == (1L to 60L).toSet)
-    assert(out.values.forall(_ == 1L), out.toString)
+    ccCaps.foreach { cap =>
+      val out = ccMap(chain, cap)(_.getLong(_))
+      assert(out.keySet == (1L to 60L).toSet, s"cap $cap")
+      assert(out.values.forall(_ == 1L), s"cap $cap: $out")
+    }
   }
 
   test("connected components on string node ids uses lexicographic minima (oracle semantics)") {
     val s = spark
     import s.implicits._
     val edges = Seq(("b", "c"), ("c", "aa"), ("z", "y")).toDF("a", "b")
-    val out = KgPipeline.connectedComponents(edges).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(out == Map("aa" -> "aa", "b" -> "aa", "c" -> "aa", "y" -> "y", "z" -> "y"))
+    ccCaps.foreach { cap =>
+      val out = ccMap(edges, cap)(_.getString(_))
+      assert(out == Map("aa" -> "aa", "b" -> "aa", "c" -> "aa", "y" -> "y", "z" -> "y"), s"cap $cap")
+    }
   }
 
   test("connectedComponentsDelta merges touched components only and equals the full recompute") {
@@ -469,18 +481,20 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // delta: c-e merges the two big components; b-a is a same-component
     // no-op; g-h is a brand-new pair; z attaches to f
     val delta = Seq(("c", "e"), ("b", "a"), ("g", "h"), ("f", "z")).toDF("a", "b")
-    val got = KgPipeline.connectedComponentsDelta(baseLabels, delta).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "a",
-      "f" -> "f", "z" -> "f", "g" -> "g", "h" -> "g"), got.toString)
     // definitional equivalence: full CC over (base-label graph ∪ delta)
     val fullEdges = baseLabels.where($"node" =!= $"component")
       .select($"node".as("a"), $"component".as("b"))
       .unionByName(delta)
-    val full = KgPipeline.connectedComponents(fullEdges).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    // full CC never sees edge-less nodes; delta keeps isolated f — align
-    assert(got.filter { case (k, _) => full.contains(k) } == full, s"$got vs $full")
+    ccCaps.foreach { cap =>
+      StageCache.clear()
+      val got = KgPipeline.connectedComponentsDelta(baseLabels, delta, 50, cap).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "a",
+        "f" -> "f", "z" -> "f", "g" -> "g", "h" -> "g"), s"cap $cap: $got")
+      val full = ccMap(fullEdges, cap)(_.getString(_))
+      // full CC never sees edge-less nodes; delta keeps isolated f — align
+      assert(got.filter { case (k, _) => full.contains(k) } == full, s"cap $cap: $got vs $full")
+    }
   }
 
   test("coherenceRank: votes flip the prior winner only when a related candidate co-occurs") {
