@@ -7,8 +7,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The one "fits on the driver" row cap and the decisions made from it:
   * broadcast a materialized frame into its joins, or run a small
-  * iterative graph kernel on the driver from a single collect instead
-  * of a few Spark jobs per round.
+  * iterative graph kernel (connected components, HITS, transitive
+  * closure) on the driver from a single collect instead of a few Spark
+  * jobs per round. A kernel whose output can outgrow its input (the
+  * closure) also holds its output to the cap and falls back to the
+  * distributed loop past it.
   *
   * The cap is rows, not bytes, and not a host constant: at cluster
   * scale an input fails the test and the operator keeps its distributed

@@ -280,6 +280,15 @@ object GraphOps {
     * Input: (a, b) undirected pairs + a (node) seed frame. Output:
     * (src, ecc, n_reached) per seed — n_reached counts the seed's
     * connected component, ecc its true eccentricity within it.
+    *
+    * Precondition: a HUB-CAPPED pair graph. Each driver round unrolls
+    * up to three hops, and the rows of one round are
+    * frontier·deg³ (seed, node) candidates streamed through the min
+    * fold's partial aggregate before its single exchange. On a capped
+    * graph that fanout is bounded; an uncapped hub of degree d puts
+    * ~d³ candidate rows per seed into one round, where a one-hop round
+    * would produce d. Cap hubs (or pass a pair table that already is)
+    * before calling.
     */
   def eccentricity(pairs: DataFrame, seeds: DataFrame, maxHops: Int = 30): DataFrame = {
     require(maxHops >= 1 && maxHops <= 32, "maxHops in [1,32]")
@@ -304,8 +313,7 @@ object GraphOps {
       // revisits at label r+h ≥ their true dist — min-folded away),
       // so the merge is complete through level r+hops and only that
       // level expands next. The hop cap bounds in-stage fanout at
-      // frontier·deg³ rows STREAMED through the partial aggregate
-      // (never materialized) — fine off a hub-capped pair graph; a
+      // frontier·deg³ rows (the scaladoc's hub-cap precondition); a
       // deeper unroll would trade that bound for little (the rounds
       // are already ≤ ⌈maxHops/3⌉).
       val hops = math.min(3, maxHops - r)

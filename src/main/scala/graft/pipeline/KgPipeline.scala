@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -41,14 +41,21 @@ object KgPipeline {
 
   private def done(path: String): Boolean = Files.exists(Paths.get(path, "_SUCCESS"))
 
-  /** Run (or resume) one stage: compute and write unless output exists. */
+  /** Run (or resume) one stage: compute and write unless output exists.
+    * A fresh write is read back under the schema of the frame just
+    * written — Parquet schema inference would cost one Spark job per
+    * read-back; a resumed stage has no frame, so it infers.
+    */
   def stage(spark: SparkSession, outRoot: String, name: String)(compute: => DataFrame): StageResult = {
     val path = s"$outRoot/$name"
     if (done(path)) StageResult(name, spark.read.parquet(path), resumed = true)
-    else {
-      compute.write.mode(SaveMode.Overwrite).parquet(path)
-      StageResult(name, spark.read.parquet(path), resumed = false)
-    }
+    else StageResult(name, writeAndRead(spark, compute, path), resumed = false)
+  }
+
+  /** Write `df` to `path` and read it back under `df`'s own schema. */
+  private def writeAndRead(spark: SparkSession, df: Dataset[_], path: String): DataFrame = {
+    df.write.mode(SaveMode.Overwrite).parquet(path)
+    spark.read.schema(df.schema).parquet(path)
   }
 
   def run(spark: SparkSession, pages: Dataset[Page], outRoot: String): Map[String, DataFrame] = {
@@ -59,10 +66,10 @@ object KgPipeline {
       if (done(s"$outRoot/triples")) spark.read.parquet(s"$outRoot/triples")
       else {
         val env = Extract.run(pages).persist(StorageLevel.MEMORY_AND_DISK)
-        env.flatMap(_.triple).write.mode(SaveMode.Overwrite).parquet(s"$outRoot/triples")
+        val written = writeAndRead(spark, env.flatMap(_.triple), s"$outRoot/triples")
         env.flatMap(_.lineage).write.mode(SaveMode.Append).parquet(s"$outRoot/metrics")
         env.unpersist()
-        spark.read.parquet(s"$outRoot/triples")
+        written
       }
 
     // ---- stage: alias dictionary (small, broadcastable) -----------------
@@ -95,7 +102,7 @@ object KgPipeline {
       "triples" -> triples, "alias_dict" -> aliasDict, "links" -> links,
       "canonical_map" -> canonicalMap, "edges" -> edges, "nodes" -> nodes,
       "adjacency" -> adjacency,
-      "metrics" -> spark.read.parquet(s"$outRoot/metrics")
+      "metrics" -> spark.read.schema(Encoders.product[LineageRow].schema).parquet(s"$outRoot/metrics")
     )
   }
 

@@ -126,6 +126,13 @@ object Similarity {
     * trap it was originally avoiding doesn't apply to a custom
     * Expression with doGenCode. Shared verify kernel of [[lshCosine]]
     * and [[embeddingNearDup]].
+    *
+    * Precondition: `corpus` is SCAN-BACKED (a Parquet table or another
+    * leaf whose count is cheap). The broadcast gate runs an
+    * unconditional `corpus.count()` and the packed table is not
+    * materialized, so a derived corpus (say, a join or a UDF pipeline
+    * over the raw vectors) runs its whole upstream plan once for the
+    * gate and again for the two verify joins.
     */
   private def relationalCosine(pairs: DataFrame, corpus: DataFrame, l: String, r: String): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)

@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructType}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** KG-side relational operators over spo triple tables: RDFS
   * entailment materialization and basic-graph-pattern (BGP) matching —
@@ -25,29 +28,59 @@ object TripleOps {
   /** Transitive closure of a (sub, sup) hierarchy — rdfs11 when the
     * edges are rdfs:subClassOf, rdfs5 when they are
     * rdfs:subPropertyOf (and the engine of [[transitivePropEntail]]'s
-    * ABox closures). Path-DOUBLING evaluation (repeated squaring):
-    * each round joins the accumulated closure with itself, so reach
-    * depth doubles per round and a depth-d relation converges in
-    * ⌈log₂ d⌉ rounds instead of the semi-naive d — per-round fixed
-    * costs (shuffle setup, driver sync, checkpoint) dominate closure
-    * work for hierarchy-shaped inputs, and at web scale a deep chain
-    * would turn O(d) rounds into the bottleneck. The distinct at
-    * every round collapses the |paths|-vs-|pairs| blowup before it
-    * compounds. Rounds are checkpointed eagerly (the q26 lineage
-    * discipline) and the loop THROWS if the cap is hit before the
-    * fixpoint (oracle-gated outputs must never ship an unstable
-    * prefix — the q26/q71 rule); a cap of k rounds certifies depth
-    * up to 2^k, so the default 64 is unreachable in practice.
+    * ABox closures). The self-loop-free direct edge set is checkpointed
+    * once, and one bounded `limit(cap + 1)` collect of it picks the
+    * path:
+    *
+    *   - at most [[DriverGate.MaxRows]] edges: a BFS from every node on
+    *     the driver emits each node it reaches through ≥1 edge, and the
+    *     result is a local frame — no Spark job per round. The closure
+    *     is quadratic at worst, so once it passes the same cap the BFS
+    *     stops and the distributed loop takes over.
+    *   - above the cap: path-DOUBLING evaluation (repeated squaring):
+    *     each round joins the accumulated closure with itself, so reach
+    *     depth doubles per round and a depth-d relation converges in
+    *     ⌈log₂ d⌉ rounds instead of the semi-naive d — per-round fixed
+    *     costs (shuffle setup, driver sync, checkpoint) dominate closure
+    *     work for hierarchy-shaped inputs, and at web scale a deep chain
+    *     would turn O(d) rounds into the bottleneck. The distinct at
+    *     every round collapses the |paths|-vs-|pairs| blowup before it
+    *     compounds. Rounds are checkpointed eagerly (the q26 lineage
+    *     discipline).
+    *
+    * Both paths THROW when the round cap is hit before the fixpoint
+    * (oracle-gated outputs must never ship an unstable prefix — the
+    * q26/q71 rule): a cap of k rounds certifies every pair whose
+    * shortest path (shortest cycle, for a derived (x, x)) is at most
+    * 2^(k−1) edges long, so the driver path throws exactly when the
+    * loop would, and the default 64 is unreachable in practice.
     *
     * Cycles converge — the pair set is finite — they just yield
     * mutual ancestry. Output is the STRICT closure (no reflexive
     * pairs unless present in input).
     */
-  def transitiveClosure(edges: DataFrame, maxIters: Int = 64): DataFrame = {
+  def transitiveClosure(edges: DataFrame, maxIters: Int = 64): DataFrame =
+    transitiveClosure(edges, maxIters, DriverGate.MaxRows)
+
+  /** [[transitiveClosure]] with the driver-path row cap (edges, and
+    * closure pairs) as a parameter: 0 sends every non-empty edge set to
+    * the distributed loop.
+    */
+  private[graft] def transitiveClosure(edges: DataFrame, maxIters: Int,
+      driverRows: Long): DataFrame = {
     val direct = edges
       .select(col("sub").cast("string").as("sub"), col("sup").cast("string").as("sup"))
       .where(col("sub") =!= col("sup"))
       .distinct().localCheckpoint(true)
+    val small = direct.select(col("sub").cast("binary"), col("sup").cast("binary"))
+      .limit(math.min(driverRows + 1, Int.MaxValue).toInt).collect()
+    val onDriver =
+      if (DriverGate.fits(small.length, driverRows)) driverClosure(direct, small, maxIters, driverRows)
+      else None
+    onDriver.getOrElse(distributedClosure(direct, maxIters))
+  }
+
+  private def distributedClosure(direct: DataFrame, maxIters: Int): DataFrame = {
     var closure = direct
     var round = 0
     while (round < maxIters) {
@@ -66,9 +99,62 @@ object TripleOps {
       closure = closure.unionByName(next)
       round += 1
     }
-    throw new IllegalStateException(
-      s"transitiveClosure did not reach a fixpoint in $maxIters rounds — " +
-        "refusing to return a truncated (unsound) closure")
+    throw closureRoundCap(maxIters)
+  }
+
+  private def closureRoundCap(maxIters: Int) = new IllegalStateException(
+    s"transitiveClosure did not reach a fixpoint in $maxIters rounds — " +
+      "refusing to return a truncated (unsound) closure")
+
+  /** The closure of a collected direct edge set (sub, sup as string
+    * bytes) as a local frame shaped like `direct`, or None once it has
+    * more than `cap` pairs. BFS from each node starts at its successors,
+    * so the node itself is reached only around a cycle — at the cycle's
+    * length, which is what the round cap measures.
+    */
+  private def driverClosure(direct: DataFrame, rows: Array[Row], maxIters: Int,
+      cap: Long): Option[DataFrame] = {
+    val (nodes, sub, sup) = DriverGate.denseEdges(rows, BinaryType)
+    val n = nodes.length
+    // successor lists, CSR: succ(start(x) until start(x + 1))
+    val start = new Array[Int](n + 1)
+    sub.foreach(x => start(x + 1) += 1)
+    for (x <- 0 until n) start(x + 1) += start(x)
+    val succ = new Array[Int](sub.length)
+    val fill = start.clone()
+    for (e <- sub.indices) { succ(fill(sub(e))) = sup(e); fill(sub(e)) += 1 }
+    val seenFrom = Array.fill(n)(-1)
+    val dist = new Array[Int](n)
+    val queue = new Array[Int](n)
+    val ids = nodes.map(DriverGate.wireValue)
+    val pairs = ArrayBuffer.empty[Row]
+    var total = 0L
+    var longest = 0
+    var x = 0
+    while (x < n && total <= cap) {
+      var head = 0
+      var tail = 0
+      def reach(from: Int, d: Int): Unit =
+        for (i <- start(from) until start(from + 1)) {
+          val y = succ(i)
+          if (seenFrom(y) != x) { seenFrom(y) = x; dist(y) = d; queue(tail) = y; tail += 1 }
+        }
+      reach(x, 1)
+      while (head < tail) { reach(queue(head), dist(queue(head)) + 1); head += 1 }
+      total += tail
+      if (total <= cap) for (i <- 0 until tail) {
+        pairs += Row(ids(x), ids(queue(i)))
+        longest = math.max(longest, dist(queue(i)))
+      }
+      x += 1
+    }
+    if (total > cap) return None
+    // the loop's last round r < maxIters certifies paths of 2^r edges
+    val certified = if (maxIters <= 0) -1L else 1L << math.min(maxIters - 1, 62)
+    if (longest > certified) throw closureRoundCap(maxIters)
+    val schema = StructType(direct.schema.fields.map(_.copy(dataType = BinaryType)))
+    Some(direct.sparkSession.createDataFrame(pairs.asJava, schema)
+      .select(col("sub").cast("string").as("sub"), col("sup").cast("string").as("sup")))
   }
 
   /** rdfs9 type inheritance: every instance of a class is an instance
@@ -1461,12 +1547,14 @@ object TripleOps {
     *    zero-length-path universe: subjects ∪ objects), which under
     *    sequence chaining gives exactly seq(A, B?) = A ∪ (A ⋈ B).
     *  - [[OneOrMore]]   `p+` / `^p+` — the UNBOUNDED transitive
-    *    closure of the p edge set via [[transitiveClosure]]'s
-    *    pair-doubling (O(log diameter) rounds, cycle-safe: a cycle
-    *    yields the spec's x p+ x self-pairs). Pair volume is the
-    *    closure size — per-component quadratic worst case, the
-    *    inherent cost of SPARQL's existential pair semantics, kept
-    *    off all-paths blowup by the per-round distinct.
+    *    closure of the p edge set via [[transitiveClosure]]: a BFS
+    *    on the driver when the edges and the closure fit
+    *    [[DriverGate.MaxRows]], pair-doubling otherwise (O(log
+    *    diameter) rounds). Cycle-safe on both paths: a cycle yields
+    *    the spec's x p+ x self-pairs. Pair volume is the closure
+    *    size — per-component quadratic worst case, the inherent cost
+    *    of SPARQL's existential pair semantics, kept off all-paths
+    *    blowup by the BFS's visited set or the per-round distinct.
     *  - [[ZeroOrMore]]  `p*` / `^p*` — the closure plus the
     *    zero-length identity over every term (same universe rule as
     *    ZeroOrOne).

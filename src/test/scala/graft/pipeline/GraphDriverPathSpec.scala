@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The driver-side paths of [[KgPipeline.connectedComponents]] and
-  * [[GraphOps.hits]] against their distributed loops (driver cap 0),
-  * row for row on seeded random graphs, and the job budget that keeps
-  * small inputs from paying Spark jobs per round.
+/** The driver-side paths of [[KgPipeline.connectedComponents]],
+  * [[GraphOps.hits]] and [[TripleOps.transitiveClosure]] against their
+  * distributed loops (driver cap 0), row for row on seeded random
+  * graphs, and the job budget that keeps small inputs from paying
+  * Spark jobs per round.
   */
 class GraphDriverPathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -138,6 +139,87 @@ class GraphDriverPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A seeded directed graph for closures: chains, diamonds, 2-cycles,
+    * longer cycles entered from a tail, random cross edges (which close
+    * more cycles), self-loops and duplicate edges.
+    */
+  private def closureGraph(seed: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = Array.fill(400)(rnd.nextLong() >> rnd.nextInt(40)).distinct
+    val e = ArrayBuffer.empty[(Long, Long)]
+    var next = 0
+    def take(n: Int): Array[Long] = { val r = ids.slice(next, next + n); next += n; r }
+    for (_ <- 1 to 5) take(5 + rnd.nextInt(25)).sliding(2).foreach { case Array(a, b) => e += ((a, b)) }
+    for (_ <- 1 to 10) {
+      val Array(top, l, r, bottom) = take(4)
+      e ++= Seq((top, l), (top, r), (l, bottom), (r, bottom))
+    }
+    for (_ <- 1 to 10) { val Array(a, b) = take(2); e ++= Seq((a, b), (b, a)) }
+    for (_ <- 1 to 5) {
+      val c = take(3 + rnd.nextInt(10))
+      c.indices.foreach(i => e += ((c(i), c((i + 1) % c.length))))
+      e += ((take(1).head, c(rnd.nextInt(c.length))))
+    }
+    val used = ids.take(next)
+    for (_ <- 1 to 40) e += ((used(rnd.nextInt(used.length)), used(rnd.nextInt(used.length))))
+    for (_ <- 1 to 20) { val x = used(rnd.nextInt(used.length)); e += ((x, x)) }
+    rnd.shuffle(e.toSeq ++ rnd.shuffle(e.toSeq).take(60))
+  }
+
+  /** The closure's schema and its pairs as hex bytes (as Java Strings,
+    * invalid UTF-8 ids would merge).
+    */
+  private def closure(edges: DataFrame, cap: Long, maxIters: Int = 64): (String, Seq[(String, String)]) = {
+    val out = TripleOps.transitiveClosure(edges.select(col("a").as("sub"), col("b").as("sup")), maxIters, cap)
+    (out.schema.toString, out.select(hex(col("sub")), hex(col("sup")))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted)
+  }
+
+  test("transitive closure: driver BFS equals the distributed loop row for row") {
+    val s = spark
+    import s.implicits._
+    Seq(5L, 23L).foreach { seed =>
+      val longs = closureGraph(seed).toDF("a", "b")
+      val strings = (closureGraph(seed).map { case (a, b) => (str(a), str(b)) } ++
+        Seq(("\uD83D\uDE00x", "\uFFFDx"))).toDF("a", "b")
+      Seq(longs, strings).foreach { e =>
+        val (driverSchema, driver) = closure(e, DriverGate.MaxRows)
+        val (distSchema, dist) = closure(e, Distributed)
+        assert(driverSchema == distSchema)
+        assert(driver == dist, s"seed $seed ${e.schema}")
+        assert(driver.size > 1000)
+        assert(driver.exists { case (a, b) => a == b }, "cycles should derive (x, x) pairs")
+      }
+    }
+    // 0xFF and 0xFE decode to the same Java String; as bytes they differ
+    val invalid = Seq(("ff", "fe"), ("fe", "41"), ("41", "ff")).toDF("x", "y")
+      .select(unhex(col("x")).cast("string").as("a"), unhex(col("y")).cast("string").as("b"))
+    val driver = closure(invalid, DriverGate.MaxRows)
+    assert(driver == closure(invalid, Distributed))
+    assert(driver._2 == (for (a <- Seq("41", "FE", "FF"); b <- Seq("41", "FE", "FF")) yield (a, b)))
+  }
+
+  test("transitive closure: both paths throw exactly when the round cap is short") {
+    val s = spark
+    import s.implicits._
+    // maxIters m certifies paths (and cycles) of up to 2^(m-1) edges
+    def chain(len: Int) = (0 until len).map(i => (i.toLong, i + 1L)).toDF("a", "b")
+    def cycle(len: Int) = (0 until len).map(i => (i.toLong, ((i + 1) % len).toLong)).toDF("a", "b")
+    for (m <- 1 to 4; len <- Seq(1 << (m - 1), (1 << (m - 1)) + 1); shape <- Seq("chain", "cycle")) {
+      val e = if (shape == "chain") chain(len) else cycle(len)
+      val fits = len <= (1 << (m - 1))
+      Seq(DriverGate.MaxRows, Distributed).foreach { cap =>
+        if (fits) assert(closure(e, cap, m) == closure(e, DriverGate.MaxRows), s"$shape $len m=$m cap $cap")
+        else intercept[IllegalStateException](closure(e, cap, m))
+      }
+    }
+    Seq(Seq.empty[(Long, Long)].toDF("a", "b"), chain(1)).foreach { e =>
+      Seq(DriverGate.MaxRows, Distributed).foreach { cap =>
+        intercept[IllegalStateException](closure(e, cap, 0))
+      }
+    }
+  }
+
   /** Jobs started by `body`, counted by a SparkListener. Only jobs of
     * this call's job group count; a sentinel job run afterwards marks
     * the end, since a listener sees its events in order.
@@ -186,5 +268,23 @@ class GraphDriverPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the budget is tight enough to catch per-round jobs coming back
     assert(ccJobs(Distributed) > ccCeiling)
     assert(hitsJobs(Distributed) > hitsCeiling)
+  }
+
+  test("job budget: a small transitive closure runs no Spark job per round") {
+    val s = spark
+    import s.implicits._
+    // a 60-edge chain (6 doubling rounds) and its closure of 1830 pairs
+    val chain = (1L to 60L).map(i => (i, i + 1)).toDF("sub", "sup")
+    def closureJobs(cap: Long) = jobsOf(TripleOps.transitiveClosure(chain, 64, cap).collect())
+    // ceiling measured on local[4] with 4 shuffle partitions; the
+    // distributed loop measured 54 jobs on the same input
+    val ceiling = 3
+    val driver = closureJobs(DriverGate.MaxRows)
+    assert(driver <= ceiling, s"transitiveClosure ran $driver jobs on a 60-edge chain")
+    assert(closureJobs(Distributed) > ceiling)
+    // a pair cap below the closure's size falls back to the loop, with
+    // the loop's result
+    val fallback = jobsOf(assert(TripleOps.transitiveClosure(chain, 64, 100).count() == 1830))
+    assert(fallback > ceiling, s"a 100-pair cap still ran only $fallback jobs")
   }
 }

@@ -232,6 +232,35 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(canonOf("http://c.org/Unrelated") == "http://c.org/Unrelated")
   }
 
+  test("KgPipeline: a resumed run reads every stage back with the fresh run's schema and rows") {
+    val s = spark
+    import s.implicits._
+    // JSON-LD islands: near-duplicate entity names (one canonical merge),
+    // IRI-valued links (edges) and page text that mentions the aliases
+    val entities = Seq("AcmeCorporation", "AcmeCorporationX", "Widget", "Grommet", "Sprocket")
+    val pages = entities.zipWithIndex.map { case (name, i) =>
+      val knows = entities((i + 1) % entities.size)
+      val island = s"""{"@context":"https://schema.org","@id":"http://ex$i.org/$name",""" +
+        s""""name":"$name","knows":{"@id":"http://ex${(i + 1) % entities.size}.org/$knows"}}"""
+      Page(s"http://test.example/p$i", new java.sql.Timestamp(0L),
+        s"""<html><body><script type="application/ld+json">$island</script></body></html>""".getBytes("UTF-8"),
+        s"the ${name.toLowerCase} ships with a ${knows.toLowerCase} and a widget", "en")
+    }.toDS()
+    val out = java.nio.file.Files.createTempDirectory("graft_kg_resume").toString
+    StageCache.clear()
+    val fresh = KgPipeline.run(s, pages, out)
+    val resumed = KgPipeline.run(s, pages, out)
+    assert(fresh.keySet == resumed.keySet)
+    fresh.keys.foreach { name =>
+      assert(fresh(name).schema == resumed(name).schema, name)
+      val rows = fresh(name).collect().map(_.toString).sorted.toSeq
+      assert(rows == resumed(name).collect().map(_.toString).sorted.toSeq, name)
+      assert(rows.nonEmpty, s"$name is empty: the spec exercises nothing")
+    }
+    val canon = fresh("canonical_map").select("entity", "canon").as[(String, String)].collect().toMap
+    assert(canon("http://ex0.org/AcmeCorporation") == canon("http://ex1.org/AcmeCorporationX"))
+  }
+
   test("multimodal feature extraction is deterministic and flags corrupt assets") {
     val assets = Multimodal.syntheticAssets(spark, 64, 4)
     val f1 = Multimodal.extractFeatures(assets).collect().sortBy(_.asset_id)

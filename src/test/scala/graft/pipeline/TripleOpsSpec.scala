@@ -23,6 +23,10 @@ class TripleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
+  // every closure spec runs on both paths: the driver-side BFS
+  // (default cap) and the distributed pair-doubling loop (cap 0)
+  private val closureCaps = Seq(DriverGate.MaxRows, 0L)
+
   test("transitiveClosure: chain + diamond close fully; reflexive edges drop") {
     val s = spark
     import s.implicits._
@@ -31,30 +35,37 @@ class TripleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("a", "b"), ("b", "c"), ("c", "d"),
       ("x", "l"), ("x", "r"), ("l", "y"), ("r", "y"),
       ("z", "z")).toDF("sub", "sup")
-    val got = pairs(TripleOps.transitiveClosure(edges).select("sub", "sup"))
     val want = Set(
       ("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d"),
       ("x", "l"), ("x", "r"), ("x", "y"), ("l", "y"), ("r", "y"))
-    assert(got == want, got.toString)
+    closureCaps.foreach { cap =>
+      val got = pairs(TripleOps.transitiveClosure(edges, 64, cap).select("sub", "sup"))
+      assert(got == want, s"cap $cap: $got")
+    }
   }
 
   test("transitiveClosure: a cycle converges to mutual ancestry, no hang") {
     val s = spark
     import s.implicits._
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("sub", "sup")
-    val got = pairs(TripleOps.transitiveClosure(edges).select("sub", "sup"))
-    // every ordered pair of distinct nodes, both directions, plus... the
-    // closure of a 3-cycle includes (n, n) via the full loop — strict
-    // means we don't ADD reflexive pairs, not that derived ones drop
-    assert(got == (for { a <- Set("a", "b", "c"); b <- Set("a", "b", "c") } yield (a, b)), got.toString)
+    closureCaps.foreach { cap =>
+      val got = pairs(TripleOps.transitiveClosure(edges, 64, cap).select("sub", "sup"))
+      // every ordered pair of distinct nodes, both directions, plus... the
+      // closure of a 3-cycle includes (n, n) via the full loop — strict
+      // means we don't ADD reflexive pairs, not that derived ones drop
+      assert(got == (for { a <- Set("a", "b", "c"); b <- Set("a", "b", "c") } yield (a, b)),
+        s"cap $cap: $got")
+    }
   }
 
   test("transitiveClosure: hitting the round cap before fixpoint throws") {
     val s = spark
     import s.implicits._
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")).toDF("sub", "sup")
-    intercept[IllegalStateException] {
-      TripleOps.transitiveClosure(edges, maxIters = 1).collect()
+    closureCaps.foreach { cap =>
+      intercept[IllegalStateException] {
+        TripleOps.transitiveClosure(edges, 1, cap).collect()
+      }
     }
   }
 
@@ -62,15 +73,17 @@ class TripleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val tbox = Seq(("c2", "c1"), ("c1", "c0")).toDF("sub", "sup")
-    val closure = TripleOps.transitiveClosure(tbox)
     // i1 asserts c2 AND (via domain) c1 — the c1 derivations overlap
     val types = Seq(("i1", "c2"), ("i2", "c0")).toDF("inst", "cls")
     val domained = TripleOps.domainTypes(
       Seq(("i1", "author")).toDF("inst", "prop"),
       Seq(("author", "c1")).toDF("prop", "cls"))
-    val got = pairs(TripleOps.entailTypes(types.unionByName(domained), closure)
-      .select("inst", "cls"))
-    assert(got == Set(("i1", "c2"), ("i1", "c1"), ("i1", "c0"), ("i2", "c0")), got.toString)
+    closureCaps.foreach { cap =>
+      val closure = TripleOps.transitiveClosure(tbox, 64, cap)
+      val got = pairs(TripleOps.entailTypes(types.unionByName(domained), closure)
+        .select("inst", "cls"))
+      assert(got == Set(("i1", "c2"), ("i1", "c1"), ("i1", "c0"), ("i2", "c0")), s"cap $cap: $got")
+    }
   }
 
   test("validateShapes: min/max cardinality and object-node checks; conforming graph is empty") {
